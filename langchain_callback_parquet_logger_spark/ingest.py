@@ -25,6 +25,7 @@ from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schema import (
     CUSTOM_ID_DESC_PREFIX,
@@ -176,7 +177,8 @@ def _splice_json_sections(envelope: Column, data_col: Column, raw_col: Column) -
     return F.concat(head, data_part, raw_part, F.lit("}"))
 
 
-# Raw event-file schema shared by the batch and streaming sources.
+# Raw event schema shared by the batch and streaming sources and the live
+# logger's buffer.
 # Explicit — the engine never infers schemas (SURVEY.md §1.1).
 RAW_EVENT_DDL = (
     "timestamp timestamp, run_id string, parent_run_id string, "
@@ -191,6 +193,31 @@ RAW_EVENT_DDL_FLAT = (
     "event_type string, tags string, metadata string, "
     "data string, raw string"
 )
+
+
+def rows_to_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Non-empty driver-side row tuples → a one-partition frame, with no
+    Python worker.
+
+    The rows become one ``pyarrow.Table`` typed by ``schema``, which Spark
+    reads as a ``LocalTableScan``; a list passed to ``createDataFrame`` would
+    instead be pickled into a PythonRDD and re-serialized by Python-worker
+    tasks. The rows already sit on the driver, so one task handles them.
+    Timestamps must be timezone-aware ``datetime``s; map values keep their
+    insertion order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def read_log_dataset(spark: SparkSession, path: str) -> DataFrame:

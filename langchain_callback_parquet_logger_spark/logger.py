@@ -10,9 +10,12 @@ Spark-first differences (deliberate, SURVEY.md §3.1):
 - The buffer holds *raw event rows*, not pre-serialized payloads; flush runs
   the declarative ``normalize_events`` transform + partitioned parquet write,
   so the same Catalyst plan serves live capture, batch ingest, and streaming.
+- The buffer reaches the JVM as one Arrow batch (``ingest.rows_to_frame``),
+  so no Python worker runs, and one task writes it: a flush writes one file
+  per date it touches, as the reference writes one file per flush.
 - No lock-serialized I/O: the reference writes while holding its buffer lock
   (logger.py:418-440); here the lock only guards the tiny in-memory list
-  swap — the write happens outside it, parallel across partitions.
+  swap — the write happens outside it.
 - Event dicts are serialized with a best-effort duck-typed cascade matching
   the reference's behavior (model_dump → to_dict → __dict__ → str,
   logger.py:103-150) before they enter the JVM.
@@ -32,15 +35,9 @@ from typing import Any, Iterable, Literal, Mapping, Sequence
 
 from pyspark.sql import SparkSession
 
-from .ingest import normalize_events
+from .ingest import RAW_EVENT_DDL, normalize_events, rows_to_frame
 from .schema import DEFAULT_EVENT_TYPES
 from .sinks import CompositeSink, ParquetSink, create_sink
-
-_RAW_EVENT_SCHEMA = (
-    "timestamp timestamp, run_id string, parent_run_id string, "
-    "event_type string, tags array<string>, metadata map<string,string>, "
-    "data string, raw string"
-)
 
 
 def to_jsonable(obj: Any, _depth: int = 0) -> Any:
@@ -207,13 +204,12 @@ class SparkParquetLogger:
             if not self._buffer:
                 return
             batch, self._buffer = self._buffer, []
-        df = self.spark.createDataFrame(batch, _RAW_EVENT_SCHEMA)
         normalized = normalize_events(
-            df,
+            rows_to_frame(self.spark, batch, RAW_EVENT_DDL),
             logger_metadata=self.logger_metadata,
             # rows were already filtered at capture; pass-through here keeps
             # bypass-injected events intact
-            event_types=[r[3] for r in batch],
+            event_types=sorted({r[3] for r in batch}),
         )
         self.sink.write(normalized)
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingest import RAW_EVENT_DDL, normalize_events
+from ..ingest import RAW_EVENT_DDL, normalize_events, rows_to_frame
 from ..sinks import ParquetSink
 
 
@@ -206,7 +206,7 @@ class ProgressLogger:
 
         rows, self.rows = self.rows, []
         if rows:
-            write_log(spark.createDataFrame(rows, LOG_SCHEMA), log_dir)
+            write_log(rows_to_frame(spark, rows, LOG_SCHEMA), log_dir)
         return len(rows)
 
 

@@ -3,10 +3,12 @@ test_enhanced_logging / test_raw_capture invariants (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
 
+from langchain_callback_parquet_logger_spark.ingest import RAW_EVENT_DDL, normalize_events
 from langchain_callback_parquet_logger_spark.logger import (
     SparkParquetLogger,
     safe_json_dumps,
@@ -141,6 +143,72 @@ def test_date_partitioned_layout(spark, tmp_path):
     logger.flush()
     dirs = [p.name for p in (tmp_path / "plogs").iterdir() if p.is_dir()]
     assert len(dirs) == 1 and dirs[0].startswith("date=")
+
+
+def _at(*args):
+    return dt.datetime(*args, tzinfo=dt.timezone.utc)
+
+
+# Buffer rows as log_event builds them: (timestamp, run_id, parent_run_id,
+# event_type, tags, metadata, data, raw).
+FIXED_BATCH = [
+    (_at(2024, 1, 1, 23, 59, 59, 999999), "r1", None, "llm_start", [],
+     {"k": "v", "é": "ü", "a": "b"}, '{"prompts":["p"]}', '{"x":1}'),
+    (_at(2024, 1, 2, 0, 0, 0, 1), "r2", "", "llm_end",
+     ["t", "logger_custom_id:cid-1", "custom_id_description:d"], {}, None, None),
+    (_at(1969, 7, 20, 20, 17, 40, 123456), "r3", "r1", "background_retrieval_attempt",
+     ["logger_custom_id:ünï"], {"ключ": "値"}, None, '{"y":[1,2]}'),
+    (_at(2024, 1, 2, 0, 0, 0, 0), "r4", None, "chat_model_start", ["x"],
+     {"z": "1", "m": "2"}, '{"d":"ü"}', None),
+]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_flush_matches_row_list_reference(make_logger, spark, tmp_path, tz):
+    """A flush writes what normalize_events gives over the same rows fed to
+    createDataFrame as a list. The one intended difference: metadata map
+    entries keep insertion order in the payload (the reference json.dumps
+    the dict), where the list path reorders them through a JVM hash map."""
+    from langchain_callback_parquet_logger_spark.plans.session import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.session.timeZone": tz}):
+        logger = make_logger(logger_metadata={"job": "j"})
+        logger._buffer.extend(FIXED_BATCH)
+        logger.flush()
+        got = {r.run_id: r for r in read_back(spark, tmp_path / "logs").collect()}
+        want = {
+            r.run_id: r
+            for r in normalize_events(
+                spark.createDataFrame(FIXED_BATCH, RAW_EVENT_DDL),
+                logger_metadata={"job": "j"},
+                event_types=sorted({row[3] for row in FIXED_BATCH}),
+            ).collect()
+        }
+    assert sorted(got) == sorted(want) == ["r1", "r2", "r3", "r4"]
+    for run_id, w in want.items():
+        g = got[run_id].asDict()
+        w = w.asDict()
+        assert json.loads(g.pop("payload")) == json.loads(w.pop("payload"))
+        assert g == w
+    assert '"metadata":{"k":"v","é":"ü","a":"b"}' in got["r1"].payload
+    assert '"metadata":{"z":"1","m":"2"}' in got["r4"].payload
+
+
+def test_date_flush_writes_one_file_per_date(make_logger, spark, tmp_path):
+    """One flush spanning two UTC dates leaves one parquet file per date."""
+    batch = [
+        (_at(2024, 3, 1, 23, 59, 59) + dt.timedelta(days=i % 2), f"r{i}", None,
+         "llm_start", [], {}, None, None)
+        for i in range(40)
+    ]
+    logger = make_logger(partition_on="date")
+    logger._buffer.extend(batch)
+    logger.flush()
+    files = sorted(
+        p.relative_to(tmp_path / "logs").as_posix()
+        for p in (tmp_path / "logs").rglob("*.parquet")
+    )
+    assert [f.split("/")[0] for f in files] == ["date=2024-03-01", "date=2024-03-02"]
 
 
 # --- serialization cascade (reference logger.py:103-150) ---
