@@ -14,7 +14,12 @@ Semantics preserved from the reference:
 - concurrency ceiling: ≤ ``max_concurrency`` coroutines in flight *per
   partition* (total = partitions × max_concurrency; callers wanting the
   reference's single-process ceiling use ``repartition(1)`` or set
-  ``target_partitions``);
+  ``target_partitions``). ``batch_process`` and ``retrieve_with_checkpoint``
+  coalesce their input to ``ceil(rows / max_concurrency)`` partitions, so
+  every row is in flight in one wave and no partition's event loop runs
+  fewer rows than its semaphore admits; coalesce never adds partitions, so
+  at scale the input's partitioning stands. Both return *materialized*
+  results: ``fn`` runs once per row however many actions the caller takes;
 - order: results carry the row id — reattachment is an equi join on id
   (J3), never positional;
 - errors: ``return_exceptions=True`` turns a raised exception into
@@ -33,6 +38,7 @@ by (arrow batch size × row width), not the dataset.
 from __future__ import annotations
 
 import asyncio
+import math
 import random
 import time
 from dataclasses import dataclass, field
@@ -252,6 +258,29 @@ async def _default_noop(row: dict) -> str:  # pragma: no cover
     return ""
 
 
+def _map_once(
+    df: DataFrame,
+    n_rows: int,
+    fn: RowFn,
+    max_concurrency: int,
+    columns: ColumnConfig,
+    retry: RetryConfig | None,
+) -> DataFrame:
+    """Run ``batch_run`` over a materialized input of ``n_rows`` rows as one
+    concurrency wave and materialize its results.
+
+    Each Python worker task has a fixed start-up cost, so the input is
+    coalesced to the fewest partitions that still put every row in flight
+    at once: ``ceil(n_rows / max_concurrency)``. ``coalesce`` never adds
+    partitions, so an input already narrower than that keeps its own."""
+    parts = max(1, math.ceil(n_rows / max_concurrency))
+    results = batch_run(
+        df.coalesce(parts), fn, max_concurrency=max_concurrency,
+        columns=columns, retry=retry,
+    )
+    return results.localCheckpoint(eager=True)
+
+
 def batch_process(
     df: DataFrame,
     fn: RowFn,
@@ -269,12 +298,16 @@ def batch_process(
     validate → template output path → build job-metadata JSON → run the
     async map → return (results frame, output path, metadata).
 
+    The input is read once and the results frame is materialized, so ``fn``
+    has run exactly once per row when this returns.
+
     The metadata dict mirrors the reference's flat legacy fields + nested
     batch_config (batch.py:226-254); ``started_at`` comes in as data (no
     wall-clock reads inside plans)."""
     from .sinks import render_output_path, sanitize_version
 
     out_path = render_output_path(base_dir, job_category, job_subcategory, job_version)
+    df = df.localCheckpoint(eager=True)
     n_rows = df.count()  # A2 — batch-size counting (reference batch.py:251)
     metadata = {
         "job_category": job_category,
@@ -294,7 +327,5 @@ def batch_process(
         **({"batch_started_at": started_at} if started_at else {}),
         **dict(extra_metadata or {}),
     }
-    results = batch_run(
-        df, fn, max_concurrency=max_concurrency, columns=columns, retry=retry
-    )
+    results = _map_once(df, n_rows, fn, max_concurrency, columns, retry)
     return results, out_path, metadata

@@ -7,8 +7,12 @@ parquet, retrying with backoff, and periodically rewriting the checkpoint
 with keep-last dedup.
 
 Spark realization (SURVEY.md §3.3):
-- the processed-set skip is a **broadcast left-anti join** (the reference's
-  only join, A5/J1) — the big input never shuffles;
+- the processed-set skip is a **broadcast flag join** (the reference's only
+  join, A5/J1): the input is left-joined once against the distinct
+  processed ids and checkpointed, and the pending rows, the
+  ``already_processed`` rows, the map's sizing count and the audit trail
+  all read that one checkpoint — the big input never shuffles and is read
+  once;
 - checkpoint accumulation is union + **window keep-last dedup** with an
   explicit ``updated_at`` ordering column — the reference relies on
   pd.concat order (background_retrieval.py:360-362) which has no meaning in
@@ -29,22 +33,26 @@ from typing import Awaitable, Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .batchmap import ColumnConfig, RetryConfig, batch_run
+from .batchmap import ColumnConfig, RetryConfig, _map_once
 from .schema import CHECKPOINT_SCHEMA
+from .sinks import ParquetSink, write_log
 
 
 def load_checkpoint(spark: SparkSession, path: str) -> DataFrame:
     """Read the checkpoint table; empty frame with the right schema if absent
-    (reference background_retrieval.py:102-118)."""
-    try:
-        df = spark.read.parquet(path)
-        missing = [f.name for f in CHECKPOINT_SCHEMA.fields if f.name not in df.columns]
-        for name in missing:
-            df = df.withColumn(name, F.lit(None).cast(dict(
-                (f.name, f.dataType) for f in CHECKPOINT_SCHEMA.fields)[name]))
-        return df.select([f.name for f in CHECKPOINT_SCHEMA.fields])
-    except Exception:
+    (reference background_retrieval.py:102-118).
+
+    Only a missing path means "nothing processed yet". Any other read
+    failure (a corrupt file, a permissions error) propagates: an empty
+    checkpoint would re-invoke the LLM for every row."""
+    if not ParquetSink(path).exists(spark):
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+    df = spark.read.parquet(path)
+    missing = [f.name for f in CHECKPOINT_SCHEMA.fields if f.name not in df.columns]
+    for name in missing:
+        df = df.withColumn(name, F.lit(None).cast(dict(
+            (f.name, f.dataType) for f in CHECKPOINT_SCHEMA.fields)[name]))
+    return df.select([f.name for f in CHECKPOINT_SCHEMA.fields])
 
 
 def dedup_keep_last(df: DataFrame, key: str = "response_id", order: str = "updated_at") -> DataFrame:
@@ -187,31 +195,41 @@ def retrieve_with_checkpoint(
     custom_id_col: str = "custom_id",
 ) -> DataFrame:
     """End-to-end resume loop (reference background_retrieval.py:272-347):
-    load checkpoint → anti-join out processed rows → async retrieve with
-    retry → merge results back into the checkpoint → return results.
+    load checkpoint → flag processed rows → async retrieve with retry →
+    merge results back into the checkpoint → return results.
 
     Already-processed rows are reported with status='already_processed'
     (reference background_retrieval.py:133-144) without re-invoking fn.
     With ``audit_log_dir`` set, the attempt/complete/error audit trail is
-    written to the log table (see :func:`audit_events`)."""
+    written to the log table (see :func:`audit_events`). The returned frame
+    is materialized: fn has run once per pending row when this returns."""
     if id_col not in df.columns:
         raise ValueError(f"missing required column {id_col!r}")
 
-    # Materialize the prior checkpoint now: it is consumed again (for the
-    # already_processed branch) AFTER save_checkpoint overwrites its files,
-    # and a lazy scan would read deleted parts.
+    # Materialize the prior checkpoint now: it feeds both the flag join and
+    # the merge in save_checkpoint, which overwrites its files.
     checkpoint = load_checkpoint(spark, checkpoint_path).localCheckpoint(eager=True)
-    keyed = df.withColumn(id_col, F.col(id_col).cast("string"))
-    pending = filter_unprocessed(keyed, checkpoint, id_col)
+    # One read of the input: a broadcast left join flags each row whose id
+    # is processed (distinct, so a duplicated checkpoint id cannot duplicate
+    # an input row), and both branches below read this one checkpoint.
+    flag = "__already_processed"
+    done = (
+        checkpoint.filter(F.col("processed"))
+        .select(F.col("response_id").alias(id_col))
+        .distinct()
+        .withColumn(flag, F.lit(True))
+    )
+    flagged = (
+        df.withColumn(id_col, F.col(id_col).cast("string"))
+        .join(F.broadcast(done), id_col, "left")
+        .localCheckpoint(eager=True)
+    )
+    pending = flagged.filter(F.col(flag).isNull()).drop(flag)
 
     cols = ColumnConfig(id=id_col, prompt=id_col)
-    results = batch_run(
-        pending, fn, max_concurrency=max_concurrency, columns=cols,
-        retry=retry or RetryConfig(),
+    results = _map_once(
+        pending, pending.count(), fn, max_concurrency, cols, retry or RetryConfig()
     )
-    # Persist before the double use (checkpoint write + return) so the async
-    # map runs once, and the overwrite below cannot race the read.
-    results = results.localCheckpoint(eager=True)
 
     save_checkpoint(
         spark,
@@ -221,17 +239,12 @@ def retrieve_with_checkpoint(
     )
 
     if audit_log_dir is not None:
-        from .sinks import write_log
-
         write_log(
             audit_events(pending, results, updated_at, id_col, custom_id_col),
             audit_log_dir,
         )
 
-    done = checkpoint.filter(F.col("processed")).select(
-        F.col("response_id").alias(id_col)
-    )
-    skipped = keyed.join(F.broadcast(done), id_col, "left_semi").select(
+    skipped = flagged.filter(F.col(flag)).select(
         F.col(id_col),
         F.lit(None).cast("string").alias("result"),
         F.lit("already_processed").alias("status"),

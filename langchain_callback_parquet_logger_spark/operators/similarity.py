@@ -549,14 +549,16 @@ EMB_GATHER_FALLBACK_BYTES = 512 * 1024 * 1024
 
 
 def _parse_mem_bytes(s: str) -> int | None:
-    """'16g' / '512m' / '16384' (JVM memory-string grammar) -> bytes."""
+    """'16g' / '512m' / '1024b' / '2048' -> bytes. Spark reads a unitless
+    ``spark.driver.memory`` as MiB, so '2048' is 2 GiB; 'b' alone is bytes."""
     m = __import__("re").fullmatch(
-        r"\s*(\d+)\s*([kmgt]?)b?\s*", str(s), __import__("re").IGNORECASE
+        r"\s*(\d+)\s*([kmgt]?)(b?)\s*", str(s), __import__("re").IGNORECASE
     )
     if not m:
         return None
-    mult = {"": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    return int(m.group(1)) * mult[m.group(2).lower()]
+    unit = (m.group(2) or m.group(3)).lower()
+    mult = {"": 1024**2, "b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
+    return int(m.group(1)) * mult[unit]
 
 
 def gather_max_bytes(spark: SparkSession) -> int:

@@ -382,7 +382,8 @@ def test_gather_max_bytes_derivation(spark, monkeypatch):
     # memory-string grammar
     assert S._parse_mem_bytes("16g") == 16 * 1024**3
     assert S._parse_mem_bytes("512m") == 512 * 1024**2
-    assert S._parse_mem_bytes("1024") == 1024
+    assert S._parse_mem_bytes("1024") == 1024 * 1024**2  # unitless is MiB
+    assert S._parse_mem_bytes("1024b") == 1024
     assert S._parse_mem_bytes("2t") == 2 * 1024**4
     assert S._parse_mem_bytes("nonsense") is None
 

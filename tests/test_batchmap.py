@@ -17,6 +17,7 @@ from langchain_callback_parquet_logger_spark.batchmap import (
     RetryConfig,
     _call_with_retry,
     attach_results,
+    batch_process,
     batch_run,
 )
 from langchain_callback_parquet_logger_spark.checkpoint import (
@@ -376,6 +377,98 @@ def test_retrieve_with_checkpoint_resume(spark, tmp_path):
     stat = {r.status for r in out2.collect()}
     assert stat == {"already_processed"}
     assert len(os.listdir(calls_log)) == first_calls  # fn not re-invoked
+
+
+def _call_recorder(calls_dir: str, id_col: str):
+    """Async row fn that leaves one marker file per invocation (executor-side)."""
+
+    async def record(row: dict) -> str:
+        import os
+        import uuid
+
+        os.makedirs(calls_dir, exist_ok=True)
+        with open(f"{calls_dir}/{row[id_col]}_{uuid.uuid4().hex}", "w"):
+            pass
+        return f"resp-{row[id_col]}"
+
+    return record
+
+
+def _calls(calls_dir: str) -> list[str]:
+    import os
+
+    if not os.path.isdir(calls_dir):
+        return []
+    return sorted(name.split("_")[0] for name in os.listdir(calls_dir))
+
+
+def test_batch_process_invokes_fn_once_per_row(spark, tmp_path):
+    """The returned frame is materialized: two actions on it do not re-run
+    the async map."""
+    calls = str(tmp_path / "calls")
+    df = spark.createDataFrame([(str(i), f"p{i}") for i in range(10)], "id string, prompt string")
+    frame, _, meta = batch_process(df, _call_recorder(calls, "id"), str(tmp_path / "out"))
+    assert meta["batch_size"] == 10
+    assert len(frame.collect()) == 10
+    assert {r.id: r.result for r in frame.collect()} == {str(i): f"resp-{i}" for i in range(10)}
+    assert _calls(calls) == sorted(str(i) for i in range(10))
+
+
+@pytest.mark.parametrize(
+    "max_concurrency, want_partitions",
+    [
+        (4, 3),  # ceil(10 / 4): one wave, no partition under its semaphore
+        (100, 1),  # every row fits one event loop
+        (2, 4),  # ceil(10 / 2) = 5 > 4: coalesce never adds partitions
+    ],
+)
+def test_batch_process_sizes_partitions_to_one_wave(
+    spark, tmp_path, max_concurrency, want_partitions
+):
+    df = spark.createDataFrame(
+        [(str(i), f"p{i}") for i in range(10)], "id string, prompt string"
+    ).repartition(4)
+    frame, _, _ = batch_process(
+        df, _echo, str(tmp_path / "out"), max_concurrency=max_concurrency
+    )
+    assert frame.rdd.getNumPartitions() == want_partitions
+    assert sorted(r.id for r in frame.collect()) == sorted(str(i) for i in range(10))
+
+
+def test_retrieve_with_checkpoint_duplicate_processed_id(spark, tmp_path):
+    """A checkpoint holding one processed id twice still reports each input
+    id exactly once."""
+    path = str(tmp_path / "ckpt")
+    t = dt.datetime(2024, 1, 1, tzinfo=UTC)
+    spark.createDataFrame(
+        [("1", True, None, t), ("1", True, None, t), ("3", False, "e", t)],
+        "response_id string, processed boolean, error string, updated_at timestamp",
+    ).write.parquet(path)
+    df = spark.createDataFrame([(str(i),) for i in range(5)], "response_id string")
+    calls = str(tmp_path / "calls")
+    out = retrieve_with_checkpoint(
+        spark, df, _call_recorder(calls, "response_id"), path, t
+    ).collect()
+    assert sorted((r.response_id, r.status) for r in out) == [
+        ("0", "ok"), ("1", "already_processed"), ("2", "ok"), ("3", "ok"), ("4", "ok"),
+    ]
+    assert _calls(calls) == ["0", "2", "3", "4"]
+
+
+def test_retrieve_with_checkpoint_unreadable_checkpoint_raises(spark, tmp_path):
+    """Only a missing checkpoint means "nothing processed": an unreadable one
+    must fail the run instead of re-invoking fn for every row."""
+    path = tmp_path / "ckpt"
+    path.mkdir()
+    (path / "part-00000.parquet").write_text("not parquet")
+    df = spark.createDataFrame([(str(i),) for i in range(3)], "response_id string")
+    calls = str(tmp_path / "calls")
+    with pytest.raises(Exception):
+        retrieve_with_checkpoint(
+            spark, df, _call_recorder(calls, "response_id"), str(path),
+            dt.datetime(2024, 1, 1, tzinfo=UTC),
+        )
+    assert _calls(calls) == []
 
 
 def test_retrieve_with_checkpoint_audit_trail(spark, tmp_path):
