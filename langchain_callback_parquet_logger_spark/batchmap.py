@@ -15,11 +15,12 @@ Semantics preserved from the reference:
   partition* (total = partitions × max_concurrency; callers wanting the
   reference's single-process ceiling use ``repartition(1)`` or set
   ``target_partitions``). ``batch_process`` and ``retrieve_with_checkpoint``
-  coalesce their input to ``ceil(rows / max_concurrency)`` partitions, so
-  every row is in flight in one wave and no partition's event loop runs
-  fewer rows than its semaphore admits; coalesce never adds partitions, so
-  at scale the input's partitioning stands. Both return *materialized*
-  results: ``fn`` runs once per row however many actions the caller takes;
+  deal a small input's rows out over ``ceil(rows / max_concurrency)``
+  partitions of at most ``max_concurrency`` rows each, so every row is in
+  flight in one wave on the fewest Python tasks; partitions are never added,
+  so at scale the input's partitioning stands. Both return *materialized*
+  results (executor-held local checkpoints): ``fn`` runs once per row
+  however many actions the caller takes;
 - order: results carry the row id — reattachment is an equi join on id
   (J3), never positional;
 - errors: ``return_exceptions=True`` turns a raised exception into
@@ -38,6 +39,7 @@ by (arrow batch size × row width), not the dataset.
 from __future__ import annotations
 
 import asyncio
+import itertools
 import math
 import random
 import time
@@ -260,25 +262,46 @@ async def _default_noop(row: dict) -> str:  # pragma: no cover
 
 def _map_once(
     df: DataFrame,
-    n_rows: int,
     fn: RowFn,
     max_concurrency: int,
     columns: ColumnConfig,
     retry: RetryConfig | None,
-) -> DataFrame:
-    """Run ``batch_run`` over a materialized input of ``n_rows`` rows as one
-    concurrency wave and materialize its results.
+) -> tuple[DataFrame, int]:
+    """Run ``batch_run`` over a materialized input as one concurrency wave,
+    materialize its results, and return them with the input's row count.
 
-    Each Python worker task has a fixed start-up cost, so the input is
-    coalesced to the fewest partitions that still put every row in flight
-    at once: ``ceil(n_rows / max_concurrency)``. ``coalesce`` never adds
-    partitions, so an input already narrower than that keeps its own."""
+    Each Python worker task has a fixed start-up cost, so the input is spread
+    over the fewest partitions that still put every row in flight at once:
+    ``ceil(rows / max_concurrency)``, each holding at most ``max_concurrency``
+    rows. Rows are dealt out by their position in the input (a JVM shuffle,
+    no Python task), not by merging whole partitions, which could stack more
+    rows in one partition than its semaphore admits. Partitions are never
+    added: an input already narrower than that keeps its own partitioning.
+
+    The results are a ``localCheckpoint``: they live in executor storage and
+    cannot be recomputed if an executor holding them is lost."""
+    counts = dict(df.groupBy(F.spark_partition_id()).count().collect())
+    sizes = [counts.get(p, 0) for p in range(df.rdd.getNumPartitions())]
+    n_rows = sum(sizes)
     parts = max(1, math.ceil(n_rows / max_concurrency))
+    if parts < len(sizes):
+        # global row position = rows in earlier partitions + position in
+        # this one (the low 33 bits of monotonically_increasing_id)
+        offsets = list(itertools.accumulate(sizes, initial=0))[:-1]
+        start = F.element_at(
+            F.array(*map(F.lit, offsets)), F.spark_partition_id() + 1
+        )
+        position = start + F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        target = "__map_partition"
+        df = (
+            df.withColumn(target, (position % parts).cast("int"))
+            .repartitionById(parts, target)
+            .drop(target)
+        )
     results = batch_run(
-        df.coalesce(parts), fn, max_concurrency=max_concurrency,
-        columns=columns, retry=retry,
+        df, fn, max_concurrency=max_concurrency, columns=columns, retry=retry
     )
-    return results.localCheckpoint(eager=True)
+    return results.localCheckpoint(eager=True), n_rows
 
 
 def batch_process(
@@ -299,7 +322,9 @@ def batch_process(
     async map → return (results frame, output path, metadata).
 
     The input is read once and the results frame is materialized, so ``fn``
-    has run exactly once per row when this returns.
+    has run exactly once per row when this returns. Both are
+    ``localCheckpoint``s held in executor storage: if an executor is lost
+    before the caller reads the results, they cannot be recomputed.
 
     The metadata dict mirrors the reference's flat legacy fields + nested
     batch_config (batch.py:226-254); ``started_at`` comes in as data (no
@@ -307,14 +332,15 @@ def batch_process(
     from .sinks import render_output_path, sanitize_version
 
     out_path = render_output_path(base_dir, job_category, job_subcategory, job_version)
-    df = df.localCheckpoint(eager=True)
-    n_rows = df.count()  # A2 — batch-size counting (reference batch.py:251)
+    results, n_rows = _map_once(
+        df.localCheckpoint(eager=True), fn, max_concurrency, columns, retry
+    )
     metadata = {
         "job_category": job_category,
         "job_subcategory": job_subcategory,
         "job_version": job_version or "unversioned",
         "job_version_safe": sanitize_version(job_version),
-        "batch_size": n_rows,
+        "batch_size": n_rows,  # A2 — batch-size counting (reference batch.py:251)
         "batch_config": {
             "max_concurrency": max_concurrency,
             "column_config": {
@@ -327,5 +353,4 @@ def batch_process(
         **({"batch_started_at": started_at} if started_at else {}),
         **dict(extra_metadata or {}),
     }
-    results = _map_once(df, n_rows, fn, max_concurrency, columns, retry)
     return results, out_path, metadata

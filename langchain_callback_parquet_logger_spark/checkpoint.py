@@ -42,10 +42,11 @@ def load_checkpoint(spark: SparkSession, path: str) -> DataFrame:
     """Read the checkpoint table; empty frame with the right schema if absent
     (reference background_retrieval.py:102-118).
 
-    Only a missing path means "nothing processed yet". Any other read
+    Only a path holding no data files (missing, empty, or left with just
+    ``_SUCCESS``/``_temporary``) means "nothing processed yet". Any read
     failure (a corrupt file, a permissions error) propagates: an empty
     checkpoint would re-invoke the LLM for every row."""
-    if not ParquetSink(path).exists(spark):
+    if not ParquetSink(path).has_data(spark):
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
     df = spark.read.parquet(path)
     missing = [f.name for f in CHECKPOINT_SCHEMA.fields if f.name not in df.columns]
@@ -62,14 +63,32 @@ def dedup_keep_last(df: DataFrame, key: str = "response_id", order: str = "updat
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
+_PROCESSED = "__already_processed"
+
+
+def _flag_processed(
+    df: DataFrame, checkpoint: DataFrame, id_col: str = "response_id"
+) -> DataFrame:
+    """A5/J1 — ``df`` with its id cast to string and a ``_PROCESSED`` column,
+    true where the checkpoint holds the id as processed, null elsewhere.
+    Broadcast left join against the *distinct* processed ids (the checkpoint
+    is small relative to the input; a duplicated id cannot duplicate a row)."""
+    done = (
+        checkpoint.filter(F.col("processed"))
+        .select(F.col("response_id").alias(id_col))
+        .distinct()
+        .withColumn(_PROCESSED, F.lit(True))
+    )
+    keyed = df.withColumn(id_col, F.col(id_col).cast("string"))
+    return keyed.join(F.broadcast(done), id_col, "left")
+
+
 def filter_unprocessed(
     df: DataFrame, checkpoint: DataFrame, id_col: str = "response_id"
 ) -> DataFrame:
-    """A5/J1 — drop rows whose id is already processed in the checkpoint.
-    Broadcast anti-join: checkpoint is small relative to the input."""
-    done = checkpoint.filter(F.col("processed")).select(id_col)
-    keyed = df.withColumn(id_col, F.col(id_col).cast("string"))
-    return keyed.join(F.broadcast(done), id_col, "left_anti")
+    """A5/J1 — drop rows whose id is already processed in the checkpoint."""
+    flagged = _flag_processed(df, checkpoint, id_col)
+    return flagged.filter(F.col(_PROCESSED).isNull()).drop(_PROCESSED)
 
 
 def save_checkpoint(
@@ -202,33 +221,22 @@ def retrieve_with_checkpoint(
     (reference background_retrieval.py:133-144) without re-invoking fn.
     With ``audit_log_dir`` set, the attempt/complete/error audit trail is
     written to the log table (see :func:`audit_events`). The returned frame
-    is materialized: fn has run once per pending row when this returns."""
+    is materialized: fn has run once per pending row when this returns. It
+    is a ``localCheckpoint`` held in executor storage, and cannot be
+    recomputed if an executor holding it is lost."""
     if id_col not in df.columns:
         raise ValueError(f"missing required column {id_col!r}")
 
     # Materialize the prior checkpoint now: it feeds both the flag join and
     # the merge in save_checkpoint, which overwrites its files.
     checkpoint = load_checkpoint(spark, checkpoint_path).localCheckpoint(eager=True)
-    # One read of the input: a broadcast left join flags each row whose id
-    # is processed (distinct, so a duplicated checkpoint id cannot duplicate
-    # an input row), and both branches below read this one checkpoint.
-    flag = "__already_processed"
-    done = (
-        checkpoint.filter(F.col("processed"))
-        .select(F.col("response_id").alias(id_col))
-        .distinct()
-        .withColumn(flag, F.lit(True))
-    )
-    flagged = (
-        df.withColumn(id_col, F.col(id_col).cast("string"))
-        .join(F.broadcast(done), id_col, "left")
-        .localCheckpoint(eager=True)
-    )
-    pending = flagged.filter(F.col(flag).isNull()).drop(flag)
+    # One read of the input: both branches below read this one checkpoint.
+    flagged = _flag_processed(df, checkpoint, id_col).localCheckpoint(eager=True)
+    pending = flagged.filter(F.col(_PROCESSED).isNull()).drop(_PROCESSED)
 
     cols = ColumnConfig(id=id_col, prompt=id_col)
-    results = _map_once(
-        pending, pending.count(), fn, max_concurrency, cols, retry or RetryConfig()
+    results, _ = _map_once(
+        pending, fn, max_concurrency, cols, retry or RetryConfig()
     )
 
     save_checkpoint(
@@ -244,7 +252,7 @@ def retrieve_with_checkpoint(
             audit_log_dir,
         )
 
-    skipped = flagged.filter(F.col(flag)).select(
+    skipped = flagged.filter(F.col(_PROCESSED)).select(
         F.col(id_col),
         F.lit(None).cast("string").alias("result"),
         F.lit("already_processed").alias("status"),

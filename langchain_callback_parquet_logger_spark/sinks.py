@@ -114,14 +114,28 @@ class ParquetSink:
                 f"sink write failed after {attempts} attempts: {self.base_dir}"
             ) from last
 
+    def _fs_path(self, spark: SparkSession, rel: str = ""):
+        path = f"{self.base_dir.rstrip('/')}/{rel}" if rel else self.base_dir
+        p = spark._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
     def exists(self, spark: SparkSession, rel: str = "") -> bool:
         """S8 — existence probe through the Hadoop FileSystem API."""
-        path = f"{self.base_dir.rstrip('/')}/{rel}" if rel else self.base_dir
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
+        fs, p = self._fs_path(spark, rel)
         return bool(fs.exists(p))
+
+    def has_data(self, spark: SparkSession) -> bool:
+        """True when the path holds something Spark's readers would read.
+        Names starting with ``_`` or ``.`` (``_SUCCESS``, ``_temporary``,
+        ``.crc`` files) are hidden from them, so a directory holding only
+        those, or nothing, has no data."""
+        fs, p = self._fs_path(spark)
+        if not fs.exists(p):
+            return False
+        return any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(p)
+        )
 
 
 @dataclass

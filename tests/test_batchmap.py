@@ -342,6 +342,10 @@ def test_filter_unprocessed(spark, tmp_path):
     df = spark.createDataFrame([("1",), ("2",), ("3",)], "response_id string")
     left = {r.response_id for r in filter_unprocessed(df, ckpt).collect()}
     assert left == {"2", "3"}  # failed rows are retried, processed are skipped
+    twice = ckpt.unionByName(ckpt)  # a duplicated id cannot duplicate a row
+    assert sorted(r.response_id for r in filter_unprocessed(df, twice).collect()) == [
+        "2", "3"
+    ]
 
 
 def test_retrieve_with_checkpoint_resume(spark, tmp_path):
@@ -414,25 +418,65 @@ def test_batch_process_invokes_fn_once_per_row(spark, tmp_path):
     assert _calls(calls) == sorted(str(i) for i in range(10))
 
 
+def _partition_sizes(df) -> list[int]:
+    return sorted(
+        r["count"] for r in df.groupBy(F.spark_partition_id()).count().collect()
+    )
+
+
 @pytest.mark.parametrize(
-    "max_concurrency, want_partitions",
+    "n_rows, max_concurrency, want_sizes",
     [
-        (4, 3),  # ceil(10 / 4): one wave, no partition under its semaphore
-        (100, 1),  # every row fits one event loop
-        (2, 4),  # ceil(10 / 2) = 5 > 4: coalesce never adds partitions
+        # ceil(10 / 4) = 3 partitions, none holding more rows than its
+        # semaphore admits
+        (10, 4, [3, 3, 4]),
+        (10, 100, [10]),  # every row fits one event loop
+        # 4 x 12 rows: merging whole partitions would stack 24 rows in one
+        (48, 16, [16, 16, 16]),
+        (10, 2, None),  # ceil(10 / 2) = 5 > 4: the input's partitions stand
     ],
 )
 def test_batch_process_sizes_partitions_to_one_wave(
-    spark, tmp_path, max_concurrency, want_partitions
+    spark, tmp_path, n_rows, max_concurrency, want_sizes
 ):
     df = spark.createDataFrame(
-        [(str(i), f"p{i}") for i in range(10)], "id string, prompt string"
+        [(str(i), f"p{i}") for i in range(n_rows)], "id string, prompt string"
     ).repartition(4)
-    frame, _, _ = batch_process(
+    frame, _, meta = batch_process(
         df, _echo, str(tmp_path / "out"), max_concurrency=max_concurrency
     )
-    assert frame.rdd.getNumPartitions() == want_partitions
-    assert sorted(r.id for r in frame.collect()) == sorted(str(i) for i in range(10))
+    # batch_run keeps one result row per input row in its partition, so the
+    # result partitions are the map's input partitions
+    want = want_sizes or _partition_sizes(df)
+    assert _partition_sizes(frame) == want
+    assert frame.rdd.getNumPartitions() == len(want)
+    assert meta["batch_size"] == n_rows
+    assert sorted(r.id for r in frame.collect()) == sorted(
+        str(i) for i in range(n_rows)
+    )
+
+
+async def _echo_id(row: dict) -> str:
+    return f"resp-{row['response_id']}"
+
+
+def test_retrieve_with_checkpoint_one_wave(spark, tmp_path):
+    """The resume's pending rows are dealt out like batch_process's input:
+    with every third of 48 ids processed, 8 ids are pending in each of 4
+    partitions; ceil(32 / 11) = 3 map partitions, none over 11 rows."""
+    path = str(tmp_path / "ckpt")
+    t = dt.datetime(2024, 1, 1, tzinfo=UTC)
+    spark.createDataFrame(
+        [(str(i), True, None, t) for i in range(0, 48, 3)],
+        "response_id string, processed boolean, error string, updated_at timestamp",
+    ).write.parquet(path)
+    df = spark.createDataFrame(
+        [(str(i),) for i in range(48)], "response_id string"
+    ).repartitionByRange(4, F.col("response_id").cast("int"))
+    out = retrieve_with_checkpoint(spark, df, _echo_id, path, t, max_concurrency=11)
+    mapped = out.filter(F.col("status") == "ok")
+    assert mapped.count() == 32
+    assert _partition_sizes(mapped) == [10, 11, 11]
 
 
 def test_retrieve_with_checkpoint_duplicate_processed_id(spark, tmp_path):
@@ -453,6 +497,28 @@ def test_retrieve_with_checkpoint_duplicate_processed_id(spark, tmp_path):
         ("0", "ok"), ("1", "already_processed"), ("2", "ok"), ("3", "ok"), ("4", "ok"),
     ]
     assert _calls(calls) == ["0", "2", "3", "4"]
+
+
+@pytest.mark.parametrize("leftovers", [(), ("_SUCCESS",), ("_temporary/0/x",)])
+def test_retrieve_with_checkpoint_empty_checkpoint_dir(spark, tmp_path, leftovers):
+    """A checkpoint directory holding no data files (pre-created, or left by
+    an interrupted overwrite) means nothing is processed yet."""
+    path = tmp_path / "ckpt"
+    path.mkdir()
+    for rel in leftovers:
+        (path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (path / rel).write_text("")
+    assert load_checkpoint(spark, str(path)).count() == 0
+    df = spark.createDataFrame([(str(i),) for i in range(3)], "response_id string")
+    calls = str(tmp_path / "calls")
+    out = retrieve_with_checkpoint(
+        spark, df, _call_recorder(calls, "response_id"), str(path),
+        dt.datetime(2024, 1, 1, tzinfo=UTC),
+    ).collect()
+    assert sorted((r.response_id, r.status) for r in out) == [
+        ("0", "ok"), ("1", "ok"), ("2", "ok"),
+    ]
+    assert _calls(calls) == ["0", "1", "2"]
 
 
 def test_retrieve_with_checkpoint_unreadable_checkpoint_raises(spark, tmp_path):
